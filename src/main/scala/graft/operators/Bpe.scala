@@ -1,239 +1,94 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => T}
 
 /** Byte-pair-encoding merge learning (Sennrich et al. 2016) — the
-  * tokenizer-fitting step of a training-data pipeline, as an
-  * iterative DataFrame computation.
+  * tokenizer-fitting step of a training-data pipeline.
   *
-  * Scale shape: the corpus is touched ONCE (tokens → word-frequency
-  * aggregate); every merge round after that runs on the
-  * WORD-FREQUENCY relation, whose size is the vocabulary — millions
-  * of rows at 100 TB, not the corpus. Two round strategies, identical
-  * output (spec-pinned parity):
+  * Scale shape: the corpus is touched ONCE, by one Spark aggregate
+  * (tokens → word-frequency relation); the merge schedule then runs
+  * on the DRIVER over the collected vocabulary. The vocabulary, not
+  * the corpus, must fit in driver memory: the collect is bounded by
+  * `spark.driver.maxResultSize` and fails loudly past it. Each round
+  * is an exact recount of adjacent pairs weighted by word frequency,
+  * so a whole schedule costs one Spark aggregate, not 3–4 serial jobs
+  * per merge as a distributed per-round recount does.
   *
-  *  - `incremental = false` (default): each round re-counts adjacent
-  *    pairs with one vocab-sized explode + groupBy and rewrites the
-  *    whole symbolized vocab. MEASURED fastest at short merge
-  *    schedules (64 merges, sf0.1: 10.3s vs 32.4s incremental —
-  *    BENCH_NOTES_r10.md): early merges are single-character pairs
-  *    that occur in nearly every word, so "only touched words" is the
-  *    whole vocab and delta machinery is pure overhead.
-  *  - `incremental = true`: the pair counts live in their own
-  *    checkpointed (pair, n) relation, the argmax is a limit(1) over
-  *    that already-aggregated relation, and each merge applies ±freq
-  *    count deltas computed from only the words the merge actually
-  *    changed (a lazily-evaluated CaseWhen `array_contains(l) &&
-  *    array_contains(r)` guard keeps the interpreted merge fold off
-  *    untouched words). Per-round bound: one codegen'd whole-vocab
-  *    guard scan + fold/explode work proportional to the touched
-  *    slice + one counts-sized groupBy. This is the shape for
-  *    REALISTIC merge schedules (30k+): deep into the schedule the
-  *    best pair is a rare multi-character symbol pair, the touched
-  *    slice shrinks toward the pair frequency, and a full vocab
-  *    rewrite + recount per round would dominate.
+  * Symbols are CODE POINTS: a non-BMP character (an emoji) is one
+  * symbol, never two surrogate halves.
   *
-  * Each round re-materializes its state (lazy localCheckpoint) so
-  * lineage doesn't compound, exactly like
-  * [[Similarity.kmeansCentroids]].
-  *
-  * Determinism: the best pair maximizes (count, then lexicographic
-  * (left, right) ASCENDING as the tie-break) — no RNG, no
-  * partitioning sensitivity, so the learned merge table is
+  * Determinism: the best pair maximizes count, ties broken by the
+  * UTF-8 bytes of `l + " " + r` ascending (unsigned, i.e. code-point
+  * order — not Java's UTF-16 `String.compareTo`, which disagrees once
+  * a surrogate pair meets a character in U+E000–U+FFFF). This is the
+  * order Spark sorts strings in and the DuckDB replay (`bpeCtes`)
+  * uses. No RNG, no partitioning sensitivity: the learned table is
   * reproducible on any cluster. The merge-apply is a left-to-right
   * non-overlapping fold (aaa + (a,a) → [aa, a]), the standard BPE
-  * semantics.
+  * semantics, shared by learning and [[encodeVocab]].
   */
 object Bpe {
 
-  /** Left-to-right non-overlapping merge of adjacent (l, r) symbol
-    * pairs: fold carrying a pending symbol; vocab-sized input, so the
-    * interpreted higher-order fold is deliberate (documented tax on a
-    * small relation — the corpus never runs through it).
-    */
-  private def mergePair(syms: Column, l: Column, r: Column): Column = {
-    val folded = aggregate(
-      syms,
-      struct(
-        array().cast("array<string>").as("out"),
-        lit(null).cast("string").as("pend")),
-      (acc, s) =>
-        when(acc("pend").isNull, struct(acc("out").as("out"), s.as("pend")))
-          .when(acc("pend") === l && s === r,
-            struct(concat(acc("out"), array(concat(l, r))).as("out"),
-              lit(null).cast("string").as("pend")))
-          .otherwise(
-            struct(concat(acc("out"), array(acc("pend"))).as("out"), s.as("pend"))))
-    when(folded("pend").isNull, folded("out"))
-      .otherwise(concat(folded("out"), array(folded("pend"))))
-  }
-
-  /** Adjacent symbol pairs via the native positional 2-gram builder
-    * (overlaps included, matching reference BPE counting); the
-    * " "-joined pair string splits back unambiguously because symbols
-    * come from whitespace tokens and merges only concatenate them.
-    */
-  private def pairsOf(syms: Column): Column =
-    explode(graft.functions.gramsWs(syms, 2))
-
   /** Learn `numMerges` BPE merges over the corpus' whitespace words.
-    * Returns (merge_rank, lhs, rhs, pair_count) — rank 1 is the first
-    * (highest-count) merge. Words shorter than 2 symbols stop
-    * contributing automatically (no pairs). See the object scaladoc
-    * for the `incremental` strategy trade-off.
+    * Returns a local (merge_rank, lhs, rhs, pair_count) DataFrame —
+    * rank 1 is the first (highest-count) merge. Words shorter than 2
+    * code points carry no pairs and are dropped before the collect;
+    * learning stops early once no word has a pair left.
     */
-  def learnMerges(
-      df: DataFrame, textCol: String, numMerges: Int,
-      incremental: Boolean = false): DataFrame =
-    learnMergesImpl(df, textCol, numMerges,
-      startIncremental = incremental, crossoverFrac = -1.0)._1
-
-  /** Auto-crossover strategy: rounds start on recount (measured
-    * fastest while the best pair touches most of the vocab) and
-    * switch PERMANENTLY to incremental the first round the best
-    * pair's unweighted occurrence count falls below `crossoverFrac` ×
-    * the FIRST round's best-pair occurrence count. Occurrence count
-    * estimates the touched vocab slice (what incremental's per-round
-    * cost tracks); measuring the decay against round 1's own maximum
-    * self-calibrates across corpora, where an absolute vocab-size
-    * fraction would mis-fire on corpora whose top pair is
-    * occurrence-poor. The switch round's recount seeds the
-    * incremental counts relation, so no extra pass is paid.
-    * Identical output to either pure strategy (parity spec).
-    *
-    * Measured (BENCH_NOTES_r11.md, sf0.01, 300/1000-merge
-    * schedules): incremental's per-round fixed costs run ~4× a
-    * recount round on a ~4k-word vocab, and occurrence counts
-    * collapse below 0.3–0.5× round-1's within ~10 merges yet stay
-    * above 0.2× through merge 1000 — high fractions mis-fire into
-    * the slow leg, while the 0.1 default correctly never switched
-    * there (auto == recount) and DOES switch mid-schedule on corpora
-    * with genuine deep decay (the sf0.001 spec). Keep the default
-    * unless profiling a vocab large enough that full recount passes
-    * dominate the delta machinery.
-    */
-  def learnMergesAuto(
-      df: DataFrame, textCol: String, numMerges: Int,
-      crossoverFrac: Double = 0.1): DataFrame =
-    learnMergesAutoWithSwitch(df, textCol, numMerges, crossoverFrac)._1
-
-  /** [[learnMergesAuto]] plus the 1-based rank whose merge first ran
-    * incrementally (-1 = the schedule finished all-recount) — the
-    * observable the crossover spec and tuning runs read.
-    */
-  private[graft] def learnMergesAutoWithSwitch(
-      df: DataFrame, textCol: String, numMerges: Int,
-      crossoverFrac: Double): (DataFrame, Int) =
-    learnMergesImpl(df, textCol, numMerges,
-      startIncremental = false, crossoverFrac = crossoverFrac)
-
-  private def learnMergesImpl(
-      df: DataFrame, textCol: String, numMerges: Int,
-      startIncremental: Boolean, crossoverFrac: Double): (DataFrame, Int) = {
+  def learnMerges(df: DataFrame, textCol: String, numMerges: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // the ONLY corpus-wide pass: word frequencies
-    var vocab = df
+    var words: Array[(Array[String], Long)] = df
       .select(explode(T.tokens(col(textCol))).as("w"))
-      .where(length(col("w")) > 0)
+      .where(length(col("w")) >= 2)
       .groupBy("w").agg(count(lit(1)).as("freq"))
-      // char symbolization: split strictly BETWEEN characters — the
-      // (?=.) guard stops the lookahead matching at end-of-string,
-      // which under Spark's limit=-1 split would append a trailing
-      // empty symbol (and "" would then enter the pair counts)
-      .select(split(col("w"), "(?!^)(?=.)").as("syms"), col("freq"))
-      .localCheckpoint(eager = true)
-    var incremental = startIncremental
-    val auto = crossoverFrac >= 0.0
-    // round 1's best-pair occurrence count — the crossover yardstick
-    var occYardstick = -1L
-    // incremental only: the ONE full pair count, patched every round
-    var counts: DataFrame =
-      if (incremental)
-        vocab.where(size(col("syms")) >= 2)
-          .select(col("freq"), pairsOf(col("syms")).as("pair"))
-          .groupBy("pair").agg(sum(col("freq")).as("n"))
-          .localCheckpoint(eager = true)
-      else null
+      .as[(String, Long)].collect()
+      .map { case (w, f) => (symbols(w), f) }
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var rank = 1
-    var switchRank = if (startIncremental) 1 else -1
-    while (rank <= numMerges) {
-      val pairCounts =
-        if (incremental) counts
-        else vocab.where(size(col("syms")) >= 2)
-          .select(col("freq"), pairsOf(col("syms")).as("pair"))
-          .groupBy("pair").agg(sum(col("freq")).as("n"),
-            // auto only: occurrence count ≈ touched-word estimate
-            count(lit(1)).as("n_occ"))
-      val best = pairCounts
-        .orderBy(col("n").desc, col("pair").asc)
-        .limit(1)
-        .collect()
-      if (best.isEmpty) rank = numMerges + 1
-      else {
-        val pairStr = best(0).getString(0)
-        val n = best(0).getLong(1)
-        val sp = pairStr.indexOf(' ') // symbols never contain spaces (whitespace tokens)
-        val (lS, rS) = (pairStr.substring(0, sp), pairStr.substring(sp + 1))
-        merges += ((rank, lS, rS, n))
-        if (auto && !incremental && occYardstick < 0) occYardstick = best(0).getLong(2)
-        if (auto && !incremental &&
-            best(0).getLong(2) < crossoverFrac * occYardstick) {
-          // crossover: adopt THIS round's full recount as the counts
-          // relation (no extra pass) and apply the merge — and every
-          // later one — through the delta path
-          incremental = true
-          switchRank = rank
-          counts = pairCounts.select(col("pair"), col("n"))
-            .localCheckpoint(eager = true)
-        }
-        if (incremental) {
-          // only words CONTAINING both symbols can change under this
-          // merge (mergePair is identity otherwise); CaseWhen evaluates
-          // branches lazily per row, so the codegen'd guard keeps the
-          // interpreted fold off every untouched word. The fold runs
-          // ONCE, here — vocab and the count deltas both derive from
-          // this checkpointed slice.
-          val touches =
-            array_contains(col("syms"), lS) && array_contains(col("syms"), rS)
-          val touched = vocab
-            .where(touches)
-            .select(col("freq"), col("syms").as("old_syms"),
-              mergePair(col("syms"), lit(lS), lit(rS)).as("new_syms"))
-            .localCheckpoint(eager = true)
-          // contains-but-not-adjacent words merge to themselves —
-          // zero net delta, dropped before the explode
-          val delta = touched.where(!(col("old_syms") <=> col("new_syms")))
-          val minus = delta.where(size(col("old_syms")) >= 2)
-            .select(pairsOf(col("old_syms")).as("pair"), (-col("freq")).as("d"))
-          val plus = delta.where(size(col("new_syms")) >= 2)
-            .select(pairsOf(col("new_syms")).as("pair"), col("freq").as("d"))
-          // patch the counts; the groupBy's shuffle re-normalizes the
-          // union's concatenated partition list every round
-          counts = counts.select(col("pair"), col("n").as("d"))
-            .unionAll(minus).unionAll(plus)
-            .groupBy("pair").agg(sum(col("d")).as("n"))
-            .where(col("n") > 0)
-            .localCheckpoint(eager = true)
-          vocab = vocab.where(!touches)
-            .unionAll(touched.select(col("new_syms").as("syms"), col("freq")))
-            // union CONCATENATES partition lists — bound the count or
-            // it doubles every round (2^rounds tasks)
-            .coalesce(spark.sparkContext.defaultParallelism)
-            .localCheckpoint(eager = true)
-        } else {
-          vocab = vocab
-            .select(mergePair(col("syms"), lit(lS), lit(rS)).as("syms"), col("freq"))
-            .localCheckpoint(eager = true)
-        }
-        rank += 1
+    while (merges.length < numMerges && words.nonEmpty) {
+      val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      for ((syms, f) <- words; i <- 0 until syms.length - 1) {
+        val p = (syms(i), syms(i + 1))
+        counts(p) = counts.getOrElse(p, 0L) + f
       }
+      val ((l, r), n) = counts.reduce { (a, b) =>
+        if (a._2 != b._2) { if (a._2 > b._2) a else b }
+        else if (java.util.Arrays.compareUnsigned(
+            tieKey(a._1), tieKey(b._1)) <= 0) a
+        else b
+      }
+      merges += ((merges.length + 1, l, r, n))
+      words = words.map { case (syms, f) => (foldPair(syms, l, r), f) }
+        .filter(_._1.length >= 2)
     }
-    (merges.toSeq.toDF("merge_rank", "lhs", "rhs", "pair_count"), switchRank)
+    merges.toSeq.toDF("merge_rank", "lhs", "rhs", "pair_count")
+  }
+
+  private def tieKey(p: (String, String)): Array[Byte] =
+    (p._1 + " " + p._2).getBytes(UTF_8)
+
+  /** A word's initial symbolization: one symbol per code point. */
+  private def symbols(w: String): Array[String] =
+    w.codePoints().toArray.map(cp => new String(Character.toChars(cp)))
+
+  /** Left-to-right non-overlapping merge of adjacent (l, r) symbol
+    * pairs — the one fold both learning and encoding apply.
+    */
+  private def foldPair(syms: Array[String], l: String, r: String): Array[String] = {
+    val out = Array.newBuilder[String]
+    var pend: String = null
+    for (s <- syms) {
+      if (pend == null) pend = s
+      else if (pend == l && s == r) { out += (l + r); pend = null }
+      else { out += pend; pend = s }
+    }
+    if (pend != null) out += pend
+    out.result()
   }
 
   /** The tokenizer-APPLY step: encode the corpus with a learned merge
@@ -246,18 +101,20 @@ object Bpe {
     * merge table is config-sized by construction (`numMerges` rows),
     * so it collects to the driver and ships in the closure, and the
     * word→encoding join is broadcast-class for real vocabularies.
-    * Per word, merges apply in rank order, each as the same
-    * left-to-right non-overlapping fold as [[mergePair]] — parity is
-    * spec-pinned, and concatenating a word's symbols always
-    * reconstructs the word (char mass is merge-invariant).
+    * Per word, merges apply in rank order through the learner's own
+    * fold, so concatenating a word's symbols always reconstructs the
+    * word (code-point mass is merge-invariant).
     */
   def encodeVocab(
       words: DataFrame, wordCol: String, merges: DataFrame): DataFrame = {
     val spark = words.sparkSession
     import spark.implicits._
-    val ms: Array[(String, String)] = merges.orderBy("merge_rank")
-      .select("lhs", "rhs").collect()
-      .map(r => (r.getString(0), r.getString(1)))
+    // rank order is applied on the driver: a Spark sort of the merge
+    // table would cost jobs even when it is a local relation
+    val ms: Array[(String, String)] = merges
+      .select(col("merge_rank").cast("long"), col("lhs"), col("rhs")).collect()
+      .sortBy(_.getLong(0))
+      .map(r => (r.getString(1), r.getString(2)))
     words.select(col(wordCol).cast("string")).distinct().as[String]
       .mapPartitions(it => it.map(w => (w, applyMerges(w, ms))))
       .toDF(wordCol, "syms")
@@ -282,27 +139,7 @@ object Bpe {
       .select(col(idCol), col("word_pos"), col("sym_pos"), col("token"))
   }
 
-  private[graft] def applyMerges(
-      w: String, ms: Array[(String, String)]): Seq[String] = {
-    var syms: Array[String] = w.map(_.toString).toArray
-    var i = 0
-    while (i < ms.length && syms.length >= 2) {
-      val l = ms(i)._1; val r = ms(i)._2
-      // left-to-right non-overlapping fold, identical to mergePair
-      val out = Array.newBuilder[String]
-      var pend: String = null
-      var j = 0
-      while (j < syms.length) {
-        val s = syms(j)
-        if (pend == null) pend = s
-        else if (pend == l && s == r) { out += (l + r); pend = null }
-        else { out += pend; pend = s }
-        j += 1
-      }
-      if (pend != null) out += pend
-      syms = out.result()
-      i += 1
-    }
-    syms.toSeq
-  }
+  private def applyMerges(
+      w: String, ms: Array[(String, String)]): Seq[String] =
+    ms.foldLeft(symbols(w)) { case (syms, (l, r)) => foldPair(syms, l, r) }.toSeq
 }

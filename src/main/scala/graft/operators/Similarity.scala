@@ -217,6 +217,12 @@ object Similarity {
     * recall numbers never shift silently; the benchmarked driver
     * rows opt in with 512, and a WARN is logged whenever the cap
     * actually binds so a changed number is traceable.
+    *
+    * The result is LAZY: construction runs the query sampling, count
+    * and centroid checkpoint jobs, but the scoring pass (and, on a
+    * partial sweep, the brute truth leg) runs under each action the
+    * caller takes. Every action re-runs the sweep, so collect once
+    * (the frame is a few rows) or checkpoint it before a second one.
     */
   def nprobeSweep(
       corpus: DataFrame, vecCol: String, idCol: String, k: Int,
@@ -307,11 +313,10 @@ object Similarity {
     val hitCols = effNps.indices.map(i =>
       coalesce(sum(size(array_intersect(col("t_ids"), col(s"ta$i.id")))
         .cast("long")), lit(0L)).as(s"h$i"))
-    // the sweep rows stay DISTRIBUTED: the single-row hit aggregate
-    // explodes into one row per sweep point at ACTION time, so
-    // construction launches no .head() job and the caller's action
-    // runs the whole scoring pass (before: the returned frame was a
-    // pre-computed 4-row local result). floor(x + 0.5) on a LongType
+    // only the final hit aggregate is deferred: it explodes into one
+    // row per sweep point at ACTION time, so construction launches no
+    // .head() job for it (the sampling, count and centroid checkpoint
+    // jobs above still run at construction). floor(x + 0.5) on a LongType
     // floor replicates the previous driver-side math.round exactly:
     // the two differ only when x sits within one ulp below a
     // half-integer, unreachable for hits·10000/(nQ·k) ratios of

@@ -796,9 +796,9 @@ object TextQueries {
         .orderBy("source")
     }),
 
-    // BPE merge learning (tokenizer fitting): one corpus pass builds
-    // word frequencies, then 16 deterministic pair-merge rounds over
-    // the vocab-sized relation. Fully oracle-checked: the rounds
+    // BPE merge learning (tokenizer fitting): one corpus aggregate
+    // collects word frequencies, then 16 exact merge rounds run on the
+    // driver over that vocabulary. Fully oracle-checked: the rounds
     // unroll as 16 chained CTE steps in the DuckDB replay (bpeCtes).
     "t22_bpe_merges" -> ((s, dir) =>
       graft.operators.Bpe.learnMerges(table(s, dir, "documents"), "text", 16)
@@ -812,7 +812,8 @@ object TextQueries {
     // The compression column (chars per BPE token) is the number a
     // pretraining budget actually needs. Fully oracle-checked: the
     // DuckDB replay's round-16 vocab state IS each word's encoding
-    // (round fold ≡ rank-ordered apply — the parity TextOpsSpec pins).
+    // (learning and encoding share one fold, so the round fold ≡ the
+    // rank-ordered apply).
     "t35_bpe_encode" -> ((s, dir) => {
       val docs = table(s, dir, "documents")
       val merges = graft.operators.Bpe.learnMerges(docs, "text", 16)
@@ -949,8 +950,8 @@ object TextQueries {
         s"SELECT $t::INTEGER AS merge_rank, l AS lhs, r AS rhs, n AS pair_count FROM b$t")
         .mkString("\nUNION ALL ") +
       "\nORDER BY merge_rank"),
-    // t22's final vocab state IS each word's encoding (the learner's
-    // round fold ≡ rank-ordered apply, the parity TextOpsSpec pins),
+    // t22's final vocab state IS each word's encoding (the learner
+    // and the encoder share one fold, so round fold ≡ rank-ordered apply),
     // so the per-lang report joins the corpus words to the round-16
     // symbol counts; chars_per_token replicates Spark's
     // BigDecimal-on-shortest-repr HALF_UP rounding via the
@@ -1552,10 +1553,10 @@ object TextQueries {
     * `replace(ws, \t l \t\t r \t → \t lr \t)` is exactly the BPE
     * pend-fold (consumed matches end on the boundary the next match
     * starts from, so [a,b,a,b] → [ab,ab] and [a,a,a] → [aa,a]).
-    * Argmax tie-break is (count DESC, l||' '||r ASC) — bytewise equal
-    * to the Spark side's pair-string ordering because symbols contain
-    * no chars below 0x21. Emits CTEs w0, v0, b1..bk, v1..vk; the
-    * caller appends the final SELECT.
+    * Argmax tie-break is (count DESC, l || ' ' || r ASC): DuckDB
+    * orders VARCHARs by their UTF-8 bytes, so this is the learner's
+    * own key in the learner's own order. Emits CTEs w0, v0, b1..bk,
+    * v1..vk; the caller appends the final SELECT.
     */
   private def bpeCtes(k: Int): String = {
     val base =

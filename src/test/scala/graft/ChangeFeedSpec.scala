@@ -312,25 +312,6 @@ class ChangeFeedSpec extends SparkSpec {
     // a thread pool. The grouped rewrite must issue a CONSTANT number
     // of jobs per partition scheme — so doubling the affected file
     // count must not change the job count at all.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    // the listener bus is async and private; settle by polling until
-    // the count stops moving (job STARTS all precede body returning,
-    // so this only waits out bus delivery, never a straggling job)
-    def settled(): Int = {
-      var prev = -1; var cur = jobs.get()
-      while (cur != prev) { Thread.sleep(200); prev = cur; cur = jobs.get() }
-      cur
-    }
-    def countJobs(body: => Unit): Int = {
-      spark.sparkContext.addSparkListener(listener)
-      jobs.set(0)
-      try { body; settled() }
-      finally spark.sparkContext.removeSparkListener(listener)
-    }
     def lakeWith(nFiles: Int): String = {
       val dir = Files.createTempDirectory(s"graft_cowjobs$nFiles").toString
       val df = spark.range(nFiles.toLong * 10)

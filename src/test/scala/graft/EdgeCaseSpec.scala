@@ -143,18 +143,14 @@ class EdgeCaseSpec extends SparkSpec {
     }
   }
 
-  test("BPE: zero merges, empty corpus, single-char words — both strategies") {
+  test("BPE: zero merges, empty corpus, single-char words") {
     import graft.operators.Bpe
-    for (inc <- Seq(false, true)) {
-      assert(Bpe.learnMerges(noDocs, "text", 4, incremental = inc).count() === 0)
-      assert(Bpe.learnMerges(
-        Seq((1L, "hello world")).toDF("doc_id", "text"), "text", 0,
-        incremental = inc).count() === 0)
-      // single-char words carry no pairs: merge learning stops early
-      assert(Bpe.learnMerges(
-        Seq((1L, "a b c a b")).toDF("doc_id", "text"), "text", 8,
-        incremental = inc).count() === 0)
-    }
+    assert(Bpe.learnMerges(noDocs, "text", 4).count() === 0)
+    assert(Bpe.learnMerges(
+      Seq((1L, "hello world")).toDF("doc_id", "text"), "text", 0).count() === 0)
+    // single-char words carry no pairs: merge learning stops early
+    assert(Bpe.learnMerges(
+      Seq((1L, "a b c a b")).toDF("doc_id", "text"), "text", 8).count() === 0)
   }
 
   test("session-5 edges: empty ingest increment, no-match vectored delete, single-event resample") {

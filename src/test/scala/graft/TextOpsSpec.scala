@@ -216,37 +216,48 @@ class TextOpsSpec extends SparkSpec {
     assert(a.sameElements(b))
   }
 
-  test("t22: incremental and recount rounds learn identical merge tables") {
-    // the incremental path patches a persistent (pair, n) relation
-    // with ±freq deltas from touched words; any accounting error
-    // (missed word, double-counted pair, stale entry) diverges the
-    // argmax within a few rounds — pin full-table equality on the
-    // real corpus
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    def table(inc: Boolean) =
-      graft.operators.Bpe.learnMerges(docs, "text", 12, incremental = inc)
-        .collect().map(_.toString).toSeq
-    assert(table(inc = true) === table(inc = false))
+  test("t22/t35: BPE symbolizes by code point — an emoji is one symbol") {
+    import spark.implicits._
+    import graft.operators.Bpe
+    val emoji = new String(Character.toChars(0x1F600))
+    val word = "a" + emoji + "b"
+    val docs = Seq.fill(3)(word).toDF("text")
+    val merges = Bpe.learnMerges(docs, "text", 2)
+    // (a, 😀) and (😀, b) tie at 3; "a …" sorts first in UTF-8
+    assert(merges.as[(Int, String, String, Long)].collect().sortBy(_._1).toSeq
+      === Seq((1, "a", emoji, 3L), (2, "a" + emoji, "b", 3L)))
+    val vocab = Seq(word).toDF("w")
+    val enc = Bpe.encodeVocab(vocab, "w", merges).head().getSeq[String](1)
+    assert(enc.mkString === word)
+    // with no merges the symbols are exactly the word's code points
+    val raw = Bpe.encodeVocab(vocab, "w", merges.where(lit(false)))
+      .head().getSeq[String](1)
+    assert(raw === Seq("a", emoji, "b"))
+    assert(raw.mkString === word && raw.size === word.codePointCount(0, word.length))
   }
 
-  test("t22: auto-crossover learns the same table and actually switches mid-schedule") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val pure = graft.operators.Bpe.learnMerges(docs, "text", 12)
-      .collect().map(_.toString).toSeq
-    // a fraction high enough that the switch fires within 12 rounds
-    // on this corpus (pair occurrence counts decay fast), yet not on
-    // round 1 — both legs of the crossover run and must agree
-    val (autoDf, switched) =
-      graft.operators.Bpe.learnMergesAutoWithSwitch(docs, "text", 12, crossoverFrac = 0.5)
-    assert(autoDf.collect().map(_.toString).toSeq === pure)
-    assert(switched > 1 && switched <= 12, s"switch rank $switched")
-    // degenerate fractions reduce to the pure strategies
-    val (lowDf, lowSwitch) =
-      graft.operators.Bpe.learnMergesAutoWithSwitch(docs, "text", 12, crossoverFrac = 0.0)
-    assert(lowDf.collect().map(_.toString).toSeq === pure && lowSwitch === -1)
-    val (hiDf, hiSwitch) =
-      graft.operators.Bpe.learnMergesAutoWithSwitch(docs, "text", 12, crossoverFrac = 1e9)
-    assert(hiDf.collect().map(_.toString).toSeq === pure && hiSwitch === 1)
+  test("t22: argmax ties break on the UTF-8 bytes of l + \" \" + r") {
+    import spark.implicits._
+    val fullA = "\uFF41" // U+FF41, FULLWIDTH LATIN SMALL LETTER A (the tokenizer lowercases)
+    val emoji = new String(Character.toChars(0x1F600))
+    val (keyA, keyE) = (fullA + " z", emoji + " z")
+    // the fixture bites: UTF-16 order puts the emoji's surrogate first,
+    // UTF-8 (Spark's string sort, DuckDB's VARCHAR order) puts U+FF41 first
+    assert(keyE.compareTo(keyA) < 0)
+    assert(Seq(keyE, keyA).toDF("k").orderBy("k").as[String].head() === keyA)
+    val docs = Seq(fullA + "z", fullA + "z", emoji + "z", emoji + "z").toDF("text")
+    val merges = graft.operators.Bpe.learnMerges(docs, "text", 2)
+      .as[(Int, String, String, Long)].collect().sortBy(_._1).toSeq
+    assert(merges === Seq((1, fullA, "z", 2L), (2, emoji, "z", 2L)))
+  }
+
+  test("t22/t35: BPE learning is one driver-side schedule — each row runs <= 10 Spark jobs at sf0.01") {
+    val sf01 = new java.io.File(new java.io.File(sf).getParentFile, "sf0.01").getPath
+    for (q <- Seq("t22_bpe_merges", "t35_bpe_encode")) {
+      val jobs = countJobs(TextQueries.queries(q)(spark, sf01)
+        .write.format("noop").mode("overwrite").save())
+      assert(jobs <= 10, s"$q ran $jobs Spark jobs")
+    }
   }
 
   test("t19: the permutation is bucket-width invariant") {
